@@ -291,26 +291,20 @@ object Bench {
     // same warm-once/measure-twice/report-min discipline as the
     // queries: a single conversion measurement at 32 threads swings
     // 2-3x with GC phase
-    def convOnce(opts: graft.changesets.ChangesetConverter.Options): (Long, Double) = {
+    def convOnce(): (Long, Double) = {
       System.gc()
       val t0 = System.nanoTime()
       val written = graft.changesets.ChangesetConverter.convert(
-        spark, xmlDir.toString, convOut, opts)
+        spark, xmlDir.toString, convOut)
       (written, (System.nanoTime() - t0) / 1e9)
     }
-    def convMetric(opts: graft.changesets.ChangesetConverter.Options): String = {
-      convOnce(opts) // warm
-      val (rows, s1) = convOnce(opts)
-      val (_, s2) = convOnce(opts)
+    convOnce() // warm
+    val conv = {
+      val (rows, s1) = convOnce()
+      val (_, s2) = convOnce()
       val sec = math.min(s1, s2)
       s"""{"rows":$rows,"sec":${r3(sec)},"rows_per_sec":${(rows / sec).toLong}}"""
     }
-    val conv = convMetric(graft.changesets.ChangesetConverter.Options())
-    // the opt-in hand-rolled scanner (Options(fastParser=true)): same
-    // rows, ~4x the single-core throughput of the StAX datasource —
-    // the number to hold against the reference's single-threaded
-    // quick-xml converter
-    val convFast = convMetric(graft.changesets.ChangesetConverter.Options(fastParser = true))
     // ~150 MB of temp input per run — don't leak it across rounds
     def rmTree(p: java.nio.file.Path): Unit = {
       if (java.nio.file.Files.isDirectory(p)) {
@@ -399,7 +393,7 @@ object Bench {
     val detail =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","sf":"$sfDir","sf2":"$sfDir2",""" +
         s""""total_sf2":${r3(total2)},"queries":$detailQs,"converter":$conv,""" +
-        s""""converter_fast":$convFast,"ann_split":$annSplit,"calib_sec":${r3(calib)},""" +
+        s""""ann_split":$annSplit,"calib_sec":${r3(calib)},""" +
         s""""calib_samples":$calibJson,"calib_mt_sec":${r3(calibMt)},""" +
         s""""calib_mt_max_sec":${r3(calibMtMax)}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_detail.json"), detail + "\n")
@@ -464,7 +458,7 @@ object Bench {
     println(
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qsCompact,""" +
         s""""queries_elided":$elided,"total_sf2":${r3(total2)},"n_queries":${results.size},""" +
-        s""""converter":$conv,"converter_fast":$convFast,"ann_split":$annSplit,""" +
+        s""""converter":$conv,"ann_split":$annSplit,""" +
         s""""calib_sec":${r3(calib)},"calib_mt_sec":${r3(calibMt)},""" +
         s""""run_spread_sec":${r3(runSpread)},"calib_mt_ratio":${r3(mtRatio)},""" +
         s""""membw_gbs":${r3(membwSt)},"membw_mt_gbs":${r3(membwMt)},""" +

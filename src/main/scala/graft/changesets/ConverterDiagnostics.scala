@@ -1,7 +1,7 @@
 package graft.changesets
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Structural-failure diagnostics for `--continue-on-error` runs —
   * parity with the reference's error block (src/main.rs:344-363),
@@ -29,13 +29,11 @@ import org.apache.spark.sql.functions._
   *                       damaged fragment (the reference's two buffer
   *                       windows).
   *
-  * The report is computed with the splittable text framing
-  * (`lineSep = "</changeset>"`, same as FastChangesetParser), NOT the
-  * StAX datasource, which exposes neither offsets nor record order —
-  * so ONE report serves both parse paths: it describes the same
-  * damaged fragments either path skips/captures under
-  * continue-on-error. ChangesetConverterSpec pins report↔StAX and
-  * report↔fast-path agreement on damaged fixtures.
+  * The report runs the converter's own scanner (FastChangesetParser)
+  * over the same `</changeset>`-framed text records, so it lists
+  * exactly the damaged fragments `parse(continueOnError = true)`
+  * skips. ConverterDiagnosticsSpec pins report<->rows agreement on
+  * damaged fixtures.
   *
   * Scale: one linear pass over the input text, no shuffle, ~zero
   * driver state; the output is proportional to the damage, not the
@@ -53,75 +51,46 @@ object ConverterDiagnostics {
       context_head: String,
       context_tail: String)
 
-  private val Delim = "</changeset>"
-
   /** One row per structurally-damaged `<changeset>` fragment. */
   def report(spark: SparkSession, input: String): DataFrame = {
-    val txt = spark.read.option("lineSep", Delim).text(input)
-      .select(col("value"), col("_metadata.file_path").as("file"))
-    txt.mapPartitions { rows =>
-      // per-(split∩file) running state; a FilePartition can pack
-      // multiple files, so reset when the path changes
-      var curFile: String = null
+    val records = spark.read.option("lineSep", FastChangesetParser.Delim).text(input)
+      .select(col("value"), col("_metadata.file_path"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
+    records.mapPartitions { it =>
+      // per-(split∩file) position state; a FilePartition can pack
+      // multiple files, so reset it when the path changes. The
+      // scanner's lexical state runs across the partition exactly as
+      // in FastChangesetParser.parse, so the report lists exactly the
+      // fragments the converter skips.
+      var file: String = null
+      var rec: String = null
       var offset = 0L
       var nGood = 0L
       var lastGoodId: Option[Long] = None
-      rows.flatMap { r =>
-        val rec = r.getString(0)
-        val file = r.getString(1)
-        if (file != curFile) {
-          curFile = file; offset = 0L; nGood = 0L; lastGoodId = None
-        }
-        val recOffset = offset
-        val nGoodAtRec = nGood
-        val lastGoodAtRec = lastGoodId
-        val errs = scala.collection.mutable.ArrayBuffer.empty[CorruptFragment]
-        val goods = FastChangesetParser.parseRecord(rec, continueOnError = true,
-          m => errs += CorruptFragment(
-            file,
-            recOffset + m.start,
-            nGoodAtRec + m.goodsBefore,
-            // goodsBefore > 0 iff lastGoodId != null, so falling back
-            // to the running split-level id is only ever the "damage
-            // first in record" case
-            if (m.lastGoodId != null) Some(m.lastGoodId.longValue)
-            else lastGoodAtRec,
-            m.error,
-            rec.substring(m.start, math.min(m.end, m.start + 500)),
-            rec.substring(math.max(m.start, m.end - 500), m.end))
-        ).toArray // materialize: callbacks fire during iteration
+      val errs = scala.collection.mutable.ArrayBuffer.empty[CorruptFragment]
+      val scanner = new FastChangesetParser.Scanner(continueOnError = true,
+        m => errs += CorruptFragment(
+          file,
+          offset + m.start,
+          nGood + m.goodsBefore,
+          // goodsBefore > 0 iff lastGoodId != null, so falling back to
+          // the running split-level id is only ever the "damage first
+          // in record" case
+          if (m.lastGoodId != null) Some(m.lastGoodId.longValue) else lastGoodId,
+          m.error,
+          rec.substring(m.start, math.min(m.end, m.start + 500)),
+          rec.substring(math.max(m.start, m.end - 500), m.end)))
+      it.flatMap { case (r, f) =>
+        if (f != file) { file = f; offset = 0L; nGood = 0L; lastGoodId = None }
+        rec = r
+        errs.clear()
+        val goods = scanner.record(r) // callbacks fire during the scan
         nGood += goods.length
         if (goods.nonEmpty) lastGoodId = Some(goods.last.id)
-        offset += rec.length + Delim.length
-        errs
+        offset += r.length + FastChangesetParser.Delim.length
+        errs.toList
       }
     }(Encoders.product[CorruptFragment]).toDF()
-  }
-
-  /** The StAX path's corrupt-record table: what PERMISSIVE mode
-    * captured and `parse(continueOnError = true)` dropped — exposed
-    * instead of silently discarded. Bounded context windows only (the
-    * StAX datasource has no offsets; use `report` for positions).
-    */
-  def corruptRecords(spark: SparkSession, input: String): DataFrame = {
-    val table = ChangesetConverter.readRaw(spark, input, continueOnError = true)
-      .filter(col("_corrupt_record").isNotNull)
-      .select(
-        col("_metadata.file_path").as("file"),
-        // whatever the PERMISSIVE parse salvaged before failing
-        col("_id").as("partial_id"),
-        substring(col("_corrupt_record"), 1, 500).as("context_head"),
-        // negative-position substring = suffix window
-        when(length(col("_corrupt_record")) > 500,
-          substring(col("_corrupt_record"), -500, 500))
-          .otherwise(col("_corrupt_record")).as("context_tail"))
-    // RDD barrier: downstream queries (e.g. .count()) would otherwise
-    // prune the projection to nothing and trip Spark's "query
-    // references only the corrupt record column" guard at the raw
-    // scan. The barrier pins the 4-column projection; the lost
-    // codegen/pushdown across it is irrelevant on a diagnostics table
-    // sized by the damage, not the dump.
-    spark.createDataFrame(table.rdd, table.schema)
   }
 
   /** Reference-format stderr dump (src/main.rs:344-363) for the CLI's

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * contain the bytes `WARC/1.0\r\n` (a crawled page quoting a WARC
   * file, or this library's own test fixture), so separator-split
   * framing (the `lineSep` trick `FastChangesetParser` uses for XML,
-  * where the closing tag cannot appear inside a record) would tear
+  * where the closing tag can hide only inside a comment or CDATA
+  * section, which the scanner tracks across records) would tear
   * such records apart. The walker is single-pass and per-record O(1):
   * header lines to the blank line, then a length-prescribed body skip.
   *

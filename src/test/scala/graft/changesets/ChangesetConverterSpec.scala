@@ -185,6 +185,22 @@ class ChangesetConverterSpec extends SparkSpec {
     assert(parseRows(writeXml("""<changeset id="1" uid="+42"/>""")).head.uid.contains(42L))
   }
 
+  test("F13: tags but no comment tag — description is null") {
+    // the planet's common shape: editor/source tags, no comment
+    val path = writeXml(
+      """<changeset id="1013" created_at="2024-01-28T12:29:04Z" open="false" num_changes="4">
+        |  <tag k="created_by" v="JOSM/1.5"/>
+        |  <tag k="source" v="survey"/>
+        |</changeset>
+        |<changeset id="1014" open="false"><tag k="comment" v="with one"/></changeset>""".stripMargin)
+    assert(parseRows(path).map(r => r.id -> r.description).toSeq ==
+      Seq(1013L -> None, 1014L -> Some("with one")))
+    val out = s"${tmpDir("conv-f13")}/changesets.parquet"
+    assert(ChangesetConverter.convert(spark, path, out) == 2L)
+    val written = spark.read.parquet(out).orderBy("id").select("description").collect()
+    assert(written.map(r => Option(r.getString(0))).toSeq == Seq(None, Some("with one")))
+  }
+
   test("end-to-end convert writes snappy parquet with the 13-column schema") {
     val out = tmpDir("conv-out")
     val n = ChangesetConverter.convert(spark,
@@ -195,6 +211,9 @@ class ChangesetConverterSpec extends SparkSpec {
     assert(n == 2L)
     val df = spark.read.parquet(s"$out/changesets.parquet")
     assert(df.schema.fieldNames.toSeq == ChangesetSchema.output.fieldNames.toSeq)
+    // names, types AND nullability, before the parquet round trip
+    assert(ChangesetConverter.parse(spark, writeXml("""<changeset id="1"/>""")).schema ===
+      ChangesetSchema.output)
     val parts = new java.io.File(s"$out/changesets.parquet").listFiles()
       .filter(_.getName.endsWith(".parquet"))
     assert(parts.length == 1) // singleFile contract

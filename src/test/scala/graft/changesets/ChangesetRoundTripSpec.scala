@@ -20,30 +20,35 @@ class ChangesetRoundTripSpec extends SparkSpec {
   test("random changesets survive XML -> parquet round trip exactly") {
     import spark.implicits._
     (1 to 15).foreach { i =>
-      val cs = RoundTripXml.genChangesets
+      val doc = RoundTripXml.genDoc
         .apply(Gen.Parameters.default, Seed(42L + i))
         .getOrElse(fail(s"generator exhausted at iteration $i"))
       val f = Files.createTempFile("prop", ".osm")
-      Files.writeString(f, RoundTripXml.render(cs))
-      val got = ChangesetConverter.parse(spark, f.toString,
-        ChangesetConverter.Options()).as[Changeset].collect().sortBy(_.id).toList
+      Files.writeString(f, doc.xml)
+      val got = ChangesetConverter.parse(spark, f.toString)
+        .as[Changeset].collect().sortBy(_.id).toList
       // ms-truncated timestamps: the schema stores epoch millis
-      assert(got === cs.sortBy(_.id).toList, s"round-trip mismatch at seed ${42L + i}")
+      assert(got === doc.changesets.sortBy(_.id).toList, s"round-trip mismatch at seed ${42L + i}")
       Files.deleteIfExists(f)
     }
   }
 
   test("fast parser: the same round trip, bit-identical") {
     import spark.implicits._
+    // the scanner's rows taken the whole way: written by convert as
+    // Parquet, read back, and compared value for value
     (1 to 15).foreach { i =>
-      val cs = RoundTripXml.genChangesets
+      val doc = RoundTripXml.genDoc
         .apply(Gen.Parameters.default, Seed(42L + i))
         .getOrElse(fail(s"generator exhausted at iteration $i"))
       val f = Files.createTempFile("propf", ".osm")
-      Files.writeString(f, RoundTripXml.render(cs))
-      val got = ChangesetConverter.parse(spark, f.toString,
-        ChangesetConverter.Options(fastParser = true)).as[Changeset].collect().sortBy(_.id).toList
-      assert(got === cs.sortBy(_.id).toList, s"fast round-trip mismatch at seed ${42L + i}")
+      val out = Files.createTempDirectory("propf-out").resolve("cs.parquet")
+      Files.writeString(f, doc.xml)
+      val n = ChangesetConverter.convert(spark, f.toString, out.toString)
+      assert(n === doc.changesets.size.toLong, s"row count mismatch at seed ${42L + i}")
+      val got = spark.read.parquet(out.toString)
+        .as[Changeset].collect().sortBy(_.id).toList
+      assert(got === doc.changesets.sortBy(_.id).toList, s"parquet round-trip mismatch at seed ${42L + i}")
       Files.deleteIfExists(f)
     }
   }

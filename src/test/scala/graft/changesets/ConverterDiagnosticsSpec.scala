@@ -7,9 +7,9 @@ import graft.SparkSpec
 /** Diagnostics parity with the reference's structural-error block
   * (src/main.rs:344-363): position, processed-count, last good id,
   * error, bounded context windows — asserted on truncated/damaged
-  * fixtures against BOTH parser paths (the StAX datasource and the
-  * fast splittable scanner), which must keep the same rows the report
-  * explains.
+  * fixtures, together with the rows the converter keeps, which the
+  * report must explain. The StAX oracle's rows are asserted alongside
+  * where its recovery differs.
   */
 class ConverterDiagnosticsSpec extends SparkSpec {
   import spark.implicits._
@@ -20,14 +20,13 @@ class ConverterDiagnosticsSpec extends SparkSpec {
     f.toString
   }
 
-  private def fastIds(path: String): Seq[Long] =
-    ChangesetConverter.parse(spark, path,
-        ChangesetConverter.Options(continueOnError = true, fastParser = true))
-      .select("id").as[Long].collect().sorted.toSeq
-
-  private def staxIds(path: String): Seq[Long] =
+  private def keptIds(path: String): Seq[Long] =
     ChangesetConverter.parse(spark, path,
         ChangesetConverter.Options(continueOnError = true))
+      .select("id").as[Long].collect().sorted.toSeq
+
+  private def oracleIds(path: String): Seq[Long] =
+    StaxOracle.parse(spark, path, continueOnError = true)
       .select("id").as[Long].collect().sorted.toSeq
 
   test("truncated dump (reference's scenario): offset, count, last id, context reported") {
@@ -52,9 +51,10 @@ class ConverterDiagnosticsSpec extends SparkSpec {
     assert(r.getAs[String]("context_head").startsWith("""<changeset id="3""""))
     assert(r.getAs[String]("context_tail").endsWith("10:3"))
 
-    // both parse paths keep exactly the rows the report explains
-    assert(fastIds(path) === Seq(1L, 2L))
-    assert(staxIds(path) === Seq(1L, 2L))
+    // the converter keeps exactly the rows the report explains (and
+    // so does the oracle)
+    assert(keptIds(path) === Seq(1L, 2L))
+    assert(oracleIds(path) === Seq(1L, 2L))
   }
 
   test("damage mid-file: later records survive on both paths; running last-good id crosses records") {
@@ -75,17 +75,13 @@ class ConverterDiagnosticsSpec extends SparkSpec {
     assert(r.getAs[Long]("n_good_before") === 1L)
     assert(r.getAs[Long]("last_good_id") === 10L)
 
-    assert(fastIds(path) === Seq(10L, 12L))
-    // documented divergence: the StAX tokenizer consumes up to the
-    // next well-formed close while failing the damaged element, so
-    // id=12 lands INSIDE the corrupt capture and is lost there — the
-    // splittable scanner's per-fragment framing recovers strictly
-    // more. Both paths agree on everything before the damage.
-    assert(staxIds(path) === Seq(10L))
-    val corrupt = ConverterDiagnostics.corruptRecords(spark, path).collect()
-    assert(corrupt.length === 1)
-    assert(corrupt.head.getAs[String]("context_head").contains("""id="12""""),
-      "the swallowed element must at least be visible in the corrupt capture")
+    assert(keptIds(path) === Seq(10L, 12L))
+    // documented difference in recovery: the StAX tokenizer consumes
+    // up to the next well-formed close while failing the damaged
+    // element, so id=12 is lost inside its corrupt capture — the
+    // scanner's per-fragment framing recovers strictly more. Both
+    // agree on everything before the damage.
+    assert(oracleIds(path) === Seq(10L))
   }
 
   test("damage before any good record: last_good_id is null, n_good_before is 0") {
@@ -98,7 +94,7 @@ class ConverterDiagnosticsSpec extends SparkSpec {
     val r = ConverterDiagnostics.report(spark, path).collect().head
     assert(r.getAs[Long]("n_good_before") === 0L)
     assert(r.isNullAt(r.fieldIndex("last_good_id")))
-    assert(fastIds(path) === Seq(8L))
+    assert(keptIds(path) === Seq(8L))
   }
 
   test("context windows are bounded at 500 chars each on oversized fragments") {
@@ -114,20 +110,6 @@ class ConverterDiagnosticsSpec extends SparkSpec {
     assert(r.getAs[String]("context_head").startsWith("""<changeset id="2""""))
   }
 
-  test("corruptRecords exposes the StAX PERMISSIVE capture with bounded context") {
-    val content =
-      """<?xml version="1.0"?><osm>
-        |<changeset id="1" open="true"/>
-        |<changeset id="2" open="false"
-        |</osm>""".stripMargin
-    val path = write(content)
-    val rows = ConverterDiagnostics.corruptRecords(spark, path).collect()
-    assert(rows.length === 1)
-    assert(rows.head.getAs[String]("context_head").contains("""id="2""""))
-    assert(rows.head.getAs[String]("context_head").length <= 500)
-    assert(rows.head.getAs[String]("file").nonEmpty)
-  }
-
   test("clean input produces an empty report on both surfaces") {
     val content =
       """<?xml version="1.0"?><osm>
@@ -136,6 +118,6 @@ class ConverterDiagnosticsSpec extends SparkSpec {
         |</osm>""".stripMargin
     val path = write(content)
     assert(ConverterDiagnostics.report(spark, path).count() === 0L)
-    assert(ConverterDiagnostics.corruptRecords(spark, path).count() === 0L)
+    assert(keptIds(path) === Seq(1L, 2L))
   }
 }

@@ -6,9 +6,11 @@ import org.apache.spark.sql.Row
 
 import graft.SparkSpec
 
-/** The fast parser's contract is "same rows as the XML-datasource
-  * path" — pinned here differentially on edge-case fixtures and on the
-  * round-trip generator corpus, plus the two-tier error semantics.
+/** The scanner's contract is "same rows as a full XML tokenizer" —
+  * pinned here differentially against the StAX oracle (StaxOracle) on
+  * edge-case fixtures and on the round-trip generator corpus, plus the
+  * two-tier error semantics and the cases where a comment or CDATA
+  * section breaks the `</changeset>` record framing.
   */
 class FastParserSpec extends SparkSpec {
 
@@ -22,12 +24,15 @@ class FastParserSpec extends SparkSpec {
     ChangesetConverter.parse(spark, path, opts)
       .orderBy("id").collect().toSeq
 
+  private def oracleRows(path: String): Seq[Row] =
+    StaxOracle.parse(spark, path).orderBy("id").collect().toSeq
+
   private def bothAgree(xml: String): Seq[Row] = {
     val p = write(xml)
-    val slow = rows(p, ChangesetConverter.Options())
-    val fast = rows(p, ChangesetConverter.Options(fastParser = true))
-    assert(fast === slow, s"fast/slow divergence on:\n$xml")
-    slow
+    val oracle = oracleRows(p)
+    val fast = rows(p, ChangesetConverter.Options())
+    assert(fast === oracle, s"scanner/oracle divergence on:\n$xml")
+    oracle
   }
 
   test("differential: self-closing + open elements, entities, quotes, unknown attrs") {
@@ -57,14 +62,12 @@ class FastParserSpec extends SparkSpec {
   test("newline INSIDE an attribute value: fast path keeps it raw like quick-xml") {
     // XML-spec attribute-value normalization folds the newline to a
     // space; quick-xml (the reference, src/main.rs:205) hands the raw
-    // bytes through, and so does the fast path. The StAX datasource
-    // normalizes — a documented strict-path divergence from the
-    // reference, not from the fast path.
+    // bytes through, and so does the scanner. The StAX oracle
+    // normalizes — a documented oracle divergence from the reference.
     val p = write("<osm><changeset id=\"1\" user=\"multi\nline\" open=\"true\"/></osm>")
-    val fast = rows(p, ChangesetConverter.Options(fastParser = true))
+    val fast = rows(p, ChangesetConverter.Options())
     assert(fast.head.getString(4) === "multi\nline")
-    val slow = rows(p, ChangesetConverter.Options())
-    assert(slow.head.getString(4) === "multi line")
+    assert(oracleRows(p).head.getString(4) === "multi line")
   }
 
   test("differential: absent attributes default exactly like the reference") {
@@ -79,11 +82,10 @@ class FastParserSpec extends SparkSpec {
   test("differential: random round-trip corpora (seeded)") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    val gen = RoundTripXml.genChangesets
-    (1 to 10).foreach { i =>
-      val batch = gen.apply(Gen.Parameters.default, Seed(1000L + i))
+    (1 to 12).foreach { i =>
+      val doc = RoundTripXml.genDoc.apply(Gen.Parameters.default, Seed(1000L + i))
         .getOrElse(fail(s"generator exhausted at $i"))
-      bothAgree(RoundTripXml.render(batch))
+      assert(bothAgree(doc.xml).size === doc.changesets.size)
     }
   }
 
@@ -93,28 +95,26 @@ class FastParserSpec extends SparkSpec {
         """<osm><changeset id="1" uid=" 42"/></osm>""",
         """<osm><changeset id="1" created_at="2024-01-02 03:04:05"/></osm>""",
         """<osm><changeset id="1" num_changes="4294967296"/></osm>""");
-        fast <- Seq(false, true)) {
+        oracle <- Seq(false, true)) {
       val p = write(bad)
       val e = intercept[Exception] {
-        ChangesetConverter.parse(spark, p,
-          ChangesetConverter.Options(continueOnError = true, fastParser = fast)).collect()
+        if (oracle) StaxOracle.parse(spark, p, continueOnError = true).collect()
+        else ChangesetConverter.parse(spark, p,
+          ChangesetConverter.Options(continueOnError = true)).collect()
       }
-      def messages(t: Throwable): Seq[String] =
-        if (t == null) Seq.empty
-        else Option(t.getMessage).toSeq ++ messages(t.getCause)
       assert(messages(e).exists(m =>
         m.contains("parse failed") || m.contains("u32 range") ||
           m.contains("entity") || m.contains("RaiseError")),
-        s"fast=$fast xml=$bad got=${messages(e)}")
+        s"oracle=$oracle xml=$bad got=${messages(e)}")
     }
     // unresolvable entity: a VALUE error in the reference (unescape_value's
-    // `?`, src/main.rs:205) — the fast path matches; the XML datasource
+    // `?`, src/main.rs:205) — the scanner matches; the StAX oracle
     // classifies it as record corruption instead (documented divergence:
-    // entity resolution happens inside the StAX tokenizer there)
+    // entity resolution happens inside the tokenizer there)
     val p = write("""<osm><changeset id="1" user="bad &entity;"/></osm>""")
     val e = intercept[Exception] {
       ChangesetConverter.parse(spark, p,
-        ChangesetConverter.Options(continueOnError = true, fastParser = true)).collect()
+        ChangesetConverter.Options(continueOnError = true)).collect()
     }
     assert(e.getMessage != null || e.getCause != null)
   }
@@ -129,15 +129,14 @@ class FastParserSpec extends SparkSpec {
         |</osm>""".stripMargin
     val p = write(xml)
     val kept = ChangesetConverter.parse(spark, p,
-        ChangesetConverter.Options(continueOnError = true, fastParser = true))
+        ChangesetConverter.Options(continueOnError = true))
       .collect().map(_.getLong(0)).sorted.toSeq
     // fragment 2 is damaged and dropped; fragment bounds stop its
     // unterminated quote from swallowing the NEXT changeset, so 3
     // survives (strictly better recovery than a linear tokenizer)
     assert(kept === Seq(1L, 3L))
     assertThrows[Exception] {
-      ChangesetConverter.parse(spark, p,
-        ChangesetConverter.Options(fastParser = true)).collect()
+      ChangesetConverter.parse(spark, p, ChangesetConverter.Options()).collect()
     }
   }
 
@@ -145,19 +144,18 @@ class FastParserSpec extends SparkSpec {
     // quick-xml with check_* disabled passes duplicate attributes
     // through and the reference's match arms overwrite
     // (src/main.rs:207-221, last assignment wins). A validating XML
-    // parser calls this malformed — the StAX path drops the record
-    // under PERMISSIVE — so the lenient tier is fast-path parity only.
+    // parser calls this malformed — the StAX oracle drops the record
+    // under PERMISSIVE — so the lenient tier is scanner parity only.
     val p = write("""<osm><changeset id="1" user="first" user="second" open="true"/></osm>""")
-    val fast = rows(p, ChangesetConverter.Options(fastParser = true))
+    val fast = rows(p, ChangesetConverter.Options())
     assert(fast.size === 1 && fast.head.getString(4) === "second")
   }
 
   test("bz2 input (incl. multistream, the planet format): both paths agree") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
-    val batch = RoundTripXml.genChangesets
-      .apply(Gen.Parameters.default, Seed(77L)).get
-    val xml = RoundTripXml.render(batch)
+    val doc = RoundTripXml.genDoc.apply(Gen.Parameters.default, Seed(77L)).get
+    val xml = doc.xml
     // single-stream bz2
     val single = Files.createTempFile("fastp", ".osm.bz2")
     writeBz2(single, Seq(xml))
@@ -168,10 +166,10 @@ class FastParserSpec extends SparkSpec {
     val multi = Files.createTempFile("fastp-multi", ".osm.bz2")
     writeBz2(multi, Seq(xml.substring(0, half), xml.substring(half)))
     for (p <- Seq(single, multi)) {
-      val slow = rows(p.toString, ChangesetConverter.Options())
-      val fast = rows(p.toString, ChangesetConverter.Options(fastParser = true))
-      assert(fast === slow, s"bz2 fast/slow divergence for $p")
-      assert(slow.size === batch.size)
+      val oracle = oracleRows(p.toString)
+      val fast = rows(p.toString, ChangesetConverter.Options())
+      assert(fast === oracle, s"bz2 scanner/oracle divergence for $p")
+      assert(oracle.size === doc.changesets.size)
     }
   }
 
@@ -199,5 +197,97 @@ class FastParserSpec extends SparkSpec {
     assert(df.count() === n.toLong)
     assert(df.agg(org.apache.spark.sql.functions.sum("id")).head.getLong(0)
       === (n.toLong - 1) * n / 2)
+  }
+
+  /** (id, description) pairs — the two columns the divergences touch. */
+  private def idDesc(rs: Seq[Row]): Seq[(Long, Option[String])] =
+    rs.map(r => (r.getLong(0), Option(r.getString(12))))
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Seq.empty else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("divergence closed: a comment tag nested under <discussion> is not the description") {
+    val got = bothAgree(
+      """<osm><changeset id="1">
+        |  <tag k="comment" v="real"/>
+        |  <discussion><comment uid="9"><tag k="comment" v="WRONG"/><text>t</text></comment></discussion>
+        |</changeset></osm>""".stripMargin)
+    assert(idDesc(got) === Seq((1L, Some("real"))))
+  }
+
+  test("divergence closed: a comment tag inside an XML comment is not the description") {
+    val got = bothAgree(
+      """<osm><changeset id="1">
+        |  <tag k="comment" v="real"/>
+        |  <!-- <tag k="comment" v="WRONG"/> -->
+        |</changeset></osm>""".stripMargin)
+    assert(idDesc(got) === Seq((1L, Some("real"))))
+  }
+
+  /** A comment or CDATA section that holds a `</changeset>` cuts its
+    * changeset's text record short: the scanner must fail exactly that
+    * changeset through the structural tier — skipped and reported under
+    * continue-on-error, fatal without — and read nothing inside the
+    * section as a row.
+    */
+  private def assertFramingBreak(xml: String, oracle: Seq[(Long, Option[String])],
+      kept: Seq[(Long, Option[String])], damagedIds: Seq[Long]): Unit = {
+    val p = write(xml)
+    assert(idDesc(oracleRows(p)) === oracle)
+    assert(idDesc(rows(p, ChangesetConverter.Options(continueOnError = true))) === kept)
+    val rep = ConverterDiagnostics.report(spark, p).collect()
+    val startTags = rep.map(_.getAs[String]("context_head")).map(_.takeWhile(c => c != '>' && c != '/'))
+    assert(startTags.toSeq === damagedIds.map(id => s"""<changeset id="$id""""))
+    assert(rep.forall(_.getAs[String]("error").contains("breaks record framing")))
+    val e = intercept[Exception](rows(p, ChangesetConverter.Options()))
+    assert(messages(e).exists(_.contains("breaks record framing")), messages(e))
+  }
+
+  test("framing: </changeset> inside a comment fails its changeset, never a wrong description") {
+    assertFramingBreak(
+      """<osm>
+        |<changeset id="1"><!-- </changeset> --><tag k="comment" v="real"/></changeset>
+        |<changeset id="2"/>
+        |</osm>""".stripMargin,
+      oracle = Seq((1L, Some("real")), (2L, None)),
+      kept = Seq((2L, None)),
+      damagedIds = Seq(1L))
+  }
+
+  test("framing: </changeset><changeset> inside CDATA never yields a phantom row") {
+    assertFramingBreak(
+      """<osm>
+        |<changeset id="1"><discussion><comment><text><![CDATA[</changeset><changeset id="99"/>]]></text></comment></discussion></changeset>
+        |</osm>""".stripMargin,
+      oracle = Seq((1L, None)),
+      kept = Seq.empty,
+      damagedIds = Seq(1L, 99L))
+  }
+
+  test("framing: a comment spanning several delimiters is skipped whole, then rows resume") {
+    assertFramingBreak(
+      """<osm>
+        |<changeset id="1"><!-- </changeset><changeset id="98"/></changeset>
+        |<changeset id="99"> --></changeset>
+        |<changeset id="2"><tag k="comment" v="after"/></changeset>
+        |</osm>""".stripMargin,
+      oracle = Seq((1L, None), (2L, Some("after"))),
+      kept = Seq((2L, Some("after"))),
+      damagedIds = Seq(1L, 98L, 99L))
+  }
+
+  test("framing: a section left open at one file's end cannot silently drop the next file's rows") {
+    // a partition can pack several files; the scanner's state runs
+    // across all of them, so a malformed file ending inside a comment
+    // carries it into the next file — whose changesets must then be
+    // reported as damaged (fatal without continue-on-error)
+    val skipped = scala.collection.mutable.ArrayBuffer.empty[FastChangesetParser.MalformedFragment]
+    val scanner = new FastChangesetParser.Scanner(continueOnError = true, skipped += _)
+    assert(scanner.record("<osm>\n<changeset id=\"1\"/>\n<!-- unterminated").map(_.id) === Seq(1L))
+    assert(scanner.record("<osm>\n<changeset id=\"2\"/>\n</osm>\n").isEmpty)
+    assert(skipped.map(_.start) === Seq(6))
+    val strict = new FastChangesetParser.Scanner(continueOnError = false, null)
+    strict.record("<!-- unterminated")
+    assertThrows[FastChangesetParser.MalformedXmlException](strict.record("<changeset id=\"2\"/>"))
   }
 }
