@@ -1753,7 +1753,7 @@ object CorpusOps {
       val index = Similarity.ivfPqIndex(emb, "vec_id", "embedding", coarse, codebooks)
       graft.changesets.Pipeline.publishAnn(s, d, "trained", index, coarse, codebooks): Unit
     }
-    graft.changesets.Pipeline.readCurrentAnn(root).get
+    graft.changesets.VersionedStore.Ann.current(root).get
   }
 
   // ---------------------------------------------------------------- q85
@@ -1939,7 +1939,7 @@ object CorpusOps {
     graft.changesets.Pipeline.publishAnn(s, publishDir, "day1", day1, coarse, codebooks)
     graft.changesets.Pipeline.appendAnn(s, publishDir, "day2",
       emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
-    val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+    val cur = graft.changesets.VersionedStore.Ann.current(publishDir).get
     val model = graft.operators.AnnModel.load(s, graft.changesets.Pipeline.annModelDir(cur))
     // the index must be read back from the published artifact — that
     // IS the operator — but the read stays a LAZY parquet scan (r22):
@@ -1993,7 +1993,7 @@ object CorpusOps {
     graft.changesets.Pipeline.appendAnn(s, publishDir, "day2",
       emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
     // the live pointer moved on; the read below is the RETAINED pair
-    require(!graft.changesets.Pipeline.readCurrentAnn(publishDir).contains(day1Dir),
+    require(!graft.changesets.VersionedStore.Ann.current(publishDir).contains(day1Dir),
       "q171 precondition: the append must have moved the live pointer")
     val model = graft.operators.AnnModel.load(
       s, graft.changesets.Pipeline.annModelDir(day1Dir))
@@ -2047,7 +2047,7 @@ object CorpusOps {
       emb.filter(col("vec_id") >= 400 && col("vec_id") < 450), "vec_id")
     graft.changesets.Pipeline.deleteAnn(s, publishDir, "takedown2",
       emb.filter(col("vec_id") >= 450), "vec_id")
-    val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+    val cur = graft.changesets.VersionedStore.Ann.current(publishDir).get
     val model = graft.operators.AnnModel.load(
       s, graft.changesets.Pipeline.annModelDir(cur))
     // lazy artifact read, rm after the probe (see q106)
@@ -2102,7 +2102,7 @@ object CorpusOps {
     graft.changesets.Pipeline.appendAnn(s, publishDir, "day3",
       emb.filter(col("vec_id") >= 400), "vec_id", "embedding")
     graft.changesets.Pipeline.compactAnn(s, publishDir, "weekly-compact")
-    val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+    val cur = graft.changesets.VersionedStore.Ann.current(publishDir).get
     val model = graft.operators.AnnModel.load(s, graft.changesets.Pipeline.annModelDir(cur))
     // same artifact-read rule as q106 (the read-back IS the operator),
     // kept lazy: the probe materializes, then the temp dir deletes
@@ -3004,7 +3004,7 @@ object CorpusOps {
       s, publishDir, "chunks-day1", idx1, coarse, codebooks)
     graft.changesets.Pipeline.appendAnn(
       s, publishDir, "chunks-day2", day2, "vid", "embedding")
-    val cur = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+    val cur = graft.changesets.VersionedStore.Ann.current(publishDir).get
     require(cur != day1Dir,
       "q232 precondition: the append must have moved the live pointer")
     val model = graft.operators.AnnModel.load(
@@ -3019,8 +3019,16 @@ object CorpusOps {
     val liveIdx = graft.changesets.Pipeline.readAnnIndex(s, cur)
     val asofIdx = graft.changesets.Pipeline.readAnnIndex(s, day1Dir)
     graft.changesets.Pipeline.compactAnn(s, publishDir, "chunks-compact")
-    val cur2 = graft.changesets.Pipeline.readCurrentAnn(publishDir).get
+    val cur2 = graft.changesets.VersionedStore.Ann.current(publishDir).get
     require(cur2 != cur, "q232 precondition: compaction must publish a new pair")
+    // the lazy as-of/live reads above scan their segments only at the
+    // probe job below, so both versions must survive compactAnn's
+    // retention: their manifests (and with them their segments) stay
+    // only while the lifecycle fits within keepHistory
+    require(Seq(day1Dir, cur).forall(d =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(d, "manifest.json"))),
+      "q232 precondition: the as-of and live pairs must outlive compaction " +
+        "(more versions than keepHistory retains)")
     val compIdx = graft.changesets.Pipeline.readAnnIndex(s, cur2)
     // one head() contract check + one cluster collect for ALL three
     // probes — the query batch and frozen model are shared, so the
@@ -3274,16 +3282,10 @@ object CorpusOps {
     // non-ok shard, loudly) — the r21 form also called verifyShards
     // here first, paying the full scan + checksum fold twice per query
     // (guide §1.2: don't compute things you throw away)
-    // a committed EMPTY export (empty corpus drop) verifies clean and
-    // has nothing to replay
-    val replay =
-      if (graft.sources.Export.readManifest(out).totalRows == 0L)
-        s.range(0).select(col("id").as("doc_id"), col("id").as("position"),
-          col("id").as("shard"))
-      else graft.sources.Export.readShardsInOrder(s, out)
-        .select(col("doc_id"), col("position"), col("shard").cast("long").as("shard"))
-        .orderBy(col("position"))
-        .localCheckpoint(true) // materialize before deleting the temp export
+    // (a committed EMPTY export replays as an empty frame, after the
+    // check that no stray shard dir sits next to its manifest)
+    val replay = graft.sources.Export.replayOrder(s, out, "doc_id")
+      .localCheckpoint(true) // materialize before deleting the temp export
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
     }
@@ -3315,14 +3317,8 @@ object CorpusOps {
       deltaSeed = 43L, batchId = 0L)
     // verify-then-replay runs once inside readShardsInOrder (r22; the
     // explicit verifyShards call here duplicated the full checksum scan)
-    val replay =
-      if (graft.sources.Export.readManifest(out).totalRows == 0L)
-        s.range(0).select(col("id").as("doc_id"), col("id").as("position"),
-          col("id").as("shard"))
-      else graft.sources.Export.readShardsInOrder(s, out)
-        .select(col("doc_id"), col("position"), col("shard").cast("long").as("shard"))
-        .orderBy(col("position"))
-        .localCheckpoint(true) // materialize before deleting the temp export
+    val replay = graft.sources.Export.replayOrder(s, out, "doc_id")
+      .localCheckpoint(true) // materialize before deleting the temp export
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
     }

@@ -1323,7 +1323,7 @@ object TextAnalytics {
     * story behind every "which index produced run X" question.
     */
   private def q170(s: SparkSession, dir: String): DataFrame = {
-    import graft.changesets.Pipeline
+    import graft.changesets.{Pipeline, VersionedStore}
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
     val qs = docs.filter(col("doc_id") % 97 === 0)
@@ -1333,7 +1333,7 @@ object TextAnalytics {
     Pipeline.appendPostings(s, pub, "day2",
       corpus.filter(col("doc_id") >= 250), "doc_id", "text")
     // the live pointer moved on; the read below is the RETAINED version
-    require(!Pipeline.readCurrentPostings(pub).contains(baseDir),
+    require(!VersionedStore.Postings.current(pub).contains(baseDir),
       "q170 precondition: the append must have moved the live pointer")
     val post = Pipeline.readPostingsIndex(s, baseDir)
     val out = graft.operators.Retrieval
@@ -1366,7 +1366,7 @@ object TextAnalytics {
     * compact), correctness ≡ full rebuild.
     */
   private def q186(s: SparkSession, dir: String): DataFrame = {
-    import graft.changesets.Pipeline
+    import graft.changesets.{Pipeline, VersionedStore}
     val docs = t(s, dir, "documents")
     val corpus1 = docs.filter(col("doc_id") % 11 =!= 5)
       .filter(col("doc_id") % 97 =!= 0)
@@ -1396,7 +1396,7 @@ object TextAnalytics {
     Pipeline.compactPostings(s, pub, "upd-compact")
     Pipeline.appendPostings(s, pub, "upd-add", fresh, "doc_id", "t")
     val post = Pipeline.readPostingsIndex(
-      s, Pipeline.readCurrentPostings(pub).get)
+      s, VersionedStore.Postings.current(pub).get)
     val out = graft.operators.Retrieval
       .bm25OverPostings(qs, post, "doc_id", "t", k = 5)
       .orderBy(col("query_id"), col("rank"))
@@ -1427,7 +1427,7 @@ object TextAnalytics {
     * tail.
     */
   private def q172(s: SparkSession, dir: String): DataFrame = {
-    import graft.changesets.Pipeline
+    import graft.changesets.{Pipeline, VersionedStore}
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
     val qs = docs.filter(col("doc_id") % 97 === 0)
@@ -1438,7 +1438,7 @@ object TextAnalytics {
     Pipeline.deletePostings(s, pub, "takedown2",
       corpus.filter(col("doc_id") >= 400), "doc_id")
     val post = Pipeline.readPostingsIndex(
-      s, Pipeline.readCurrentPostings(pub).get)
+      s, VersionedStore.Postings.current(pub).get)
     val out = graft.operators.Retrieval
       .bm25OverPostings(qs, post, "doc_id", "text", k = 5)
       .orderBy(col("query_id"), col("rank"))
@@ -2106,7 +2106,7 @@ object TextAnalytics {
     * integer-ppm scoring chain.
     */
   private def q148(s: SparkSession, dir: String): DataFrame = {
-    import graft.changesets.Pipeline
+    import graft.changesets.{Pipeline, VersionedStore}
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
     val qs = docs.filter(col("doc_id") % 97 === 0)
@@ -2116,7 +2116,7 @@ object TextAnalytics {
     Pipeline.appendPostings(s, pub, "day2",
       corpus.filter(col("doc_id") >= 250), "doc_id", "text")
     val post = Pipeline.readPostingsIndex(
-      s, Pipeline.readCurrentPostings(pub).get)
+      s, VersionedStore.Postings.current(pub).get)
     val out = graft.operators.Retrieval
       .bm25OverPostings(qs, post, "doc_id", "text", k = 5)
       .orderBy(col("query_id"), col("rank"))
@@ -2139,7 +2139,7 @@ object TextAnalytics {
     * layout rather than passing the union through.
     */
   private def q158(s: SparkSession, dir: String): DataFrame = {
-    import graft.changesets.Pipeline
+    import graft.changesets.{Pipeline, VersionedStore}
     val docs = t(s, dir, "documents")
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
     val qs = docs.filter(col("doc_id") % 97 === 0)
@@ -2149,8 +2149,8 @@ object TextAnalytics {
     Pipeline.appendPostings(s, pub, "day2",
       corpus.filter(col("doc_id") >= 250), "doc_id", "text")
     Pipeline.compactPostings(s, pub, "week1")
-    val cur = Pipeline.readCurrentPostings(pub).get
-    assert(Pipeline.readPostingsManifest(cur).size == 1,
+    val cur = VersionedStore.Postings.current(pub).get
+    assert(VersionedStore.Postings.manifest(cur).segments.size == 1,
       "compaction must leave a single-segment manifest")
     val out = graft.operators.Retrieval
       .bm25OverPostings(qs, Pipeline.readPostingsIndex(s, cur),

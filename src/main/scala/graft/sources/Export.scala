@@ -158,11 +158,7 @@ object Export {
          |  "last_batch_id": $lastBatch,
          |  "shards": $shardJson
          |}""".stripMargin
-    val tmp = java.nio.file.Paths.get(outDir, ".manifest.json.tmp")
-    java.nio.file.Files.writeString(tmp, json)
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(outDir, "manifest.json"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    AtomicHead.commitLocal(java.nio.file.Paths.get(outDir, "manifest.json"), json)
   }
 
   /** INCREMENTAL export append — the O(delta) daily-drop step for the
@@ -398,6 +394,26 @@ object Export {
             s"(manifest ${r.getLong(1)}, files ${r.getLong(2)})").mkString("; "))
     readShardFiles(spark, outDir)
   }
+
+  /** [[readShardsInOrder]] projected to (idCol, position, shard) in
+    * position order, accepting a committed EMPTY export (an empty
+    * corpus drop): a 0-row manifest replays as an empty frame — but
+    * only when no `shard=*` dir exists. Stray shard files next to a
+    * 0-row manifest are a foreign or aborted write, and since nothing
+    * is replayed no verification would otherwise see them.
+    */
+  def replayOrder(
+      spark: org.apache.spark.sql.SparkSession, outDir: String, idCol: String): DataFrame =
+    if (readManifest(outDir).totalRows == 0L) {
+      if (shardDirsExist(outDir))
+        throw new IllegalStateException(
+          s"export at $outDir commits 0 rows but holds shard=* dirs — a foreign " +
+            "or aborted write landed next to the empty manifest")
+      spark.range(0).select(col("id").as(idCol), col("id").as("position"),
+        col("id").as("shard"))
+    } else readShardsInOrder(spark, outDir)
+      .select(col(idCol), col("position"), col("shard").cast("long").as("shard"))
+      .orderBy(col("position"))
 
   /** The shard data files only — the manifest (json) sits in the same
     * dir and must not reach the parquet footer reader.

@@ -38,7 +38,7 @@ class AnnAppendSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Int](2).toSeq)).toSet
 
   private def pairIndex(dir: String) =
-    Pipeline.readAnnIndex(spark, Pipeline.readCurrentAnn(dir).get)
+    Pipeline.readAnnIndex(spark, VersionedStore.Ann.current(dir).get)
 
   test("append == rebuild: index contents and probe results match from-scratch") {
     val dir = tmpDir("ann-append")
@@ -46,7 +46,7 @@ class AnnAppendSpec extends SparkSpec {
     Pipeline.publishAnn(spark, dir, "day1", day1, coarse, codebooks)
     Pipeline.appendAnn(spark, dir, "day2", emb(40 until 70), "vec_id", "embedding")
 
-    val cur = Pipeline.readCurrentAnn(dir).get
+    val cur = VersionedStore.Ann.current(dir).get
     assert(cur.endsWith("ann-day2"), "pointer must advance to the appended pair")
     val grown = Pipeline.readAnnIndex(spark, cur)
     val scratch = Similarity.ivfPqIndex(emb(0 until 70), "vec_id", "embedding", coarse, codebooks)
@@ -86,7 +86,8 @@ class AnnAppendSpec extends SparkSpec {
       "append rewrote base segment files — cost is O(index), not O(delta)")
     // 2. no new model artifact: the manifest references day1's model
     assert(filesUnder(modelStore) === baseModelFiles, "append copied the model artifact")
-    val (modelRef, segRefs) = Pipeline.readAnnManifest(Pipeline.readCurrentAnn(dir).get)
+    val m = VersionedStore.Ann.manifest(VersionedStore.Ann.current(dir).get)
+    val (modelRef, segRefs) = (m.model.get, m.segments)
     assert(modelRef === "_ann_models/model-day1")
     assert(segRefs === Seq("_ann_segments/seg-day1", "_ann_segments/seg-day2"))
     // 3. the new segment holds exactly the delta's rows
@@ -104,7 +105,7 @@ class AnnAppendSpec extends SparkSpec {
     // the day-1 pair is untouched by the append
     assert(indexRows(Pipeline.readAnnIndex(spark, s"$dir/ann-day1")) === day1Rows)
     // flip back: the reader protocol sees exactly the day-1 index again
-    Pipeline.flipAnnPointer(dir, "ann-day1", "day1")
+    VersionedStore.Ann.flip(dir, "ann-day1", "day1")
     assert(indexRows(pairIndex(dir)) === day1Rows)
   }
 
@@ -116,7 +117,7 @@ class AnnAppendSpec extends SparkSpec {
     Pipeline.appendAnn(spark, dir, "day3", emb(30 until 40), "vec_id", "embedding")
     // keep only the newest manifest (day3) — it references day1's
     // model and ALL THREE segments, so GC must reap nothing
-    Pipeline.applyAnnRetention(dir, keep = 1, protect = Pipeline.readCurrentAnn(dir))
+    VersionedStore.Ann.retain(dir, keep = 1)
     assert(!new java.io.File(s"$dir/ann-day1").exists())
     assert(!new java.io.File(s"$dir/ann-day2").exists())
     val segs = new java.io.File(s"$dir/_ann_segments").listFiles().map(_.getName).toSet
@@ -128,7 +129,7 @@ class AnnAppendSpec extends SparkSpec {
     val orphan = new java.io.File(s"$dir/_ann_segments/seg-orphan")
     orphan.mkdirs()
     java.nio.file.Files.writeString(orphan.toPath.resolve("part-0.parquet"), "x")
-    Pipeline.applyAnnRetention(dir, keep = 1, protect = Pipeline.readCurrentAnn(dir))
+    VersionedStore.Ann.retain(dir, keep = 1)
     assert(!orphan.exists(), "unreferenced segment must be garbage-collected")
     assert(pairIndex(dir).count() === 40, "GC touched referenced segments")
   }
@@ -156,7 +157,7 @@ class AnnAppendSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("batches must be disjoint"))
     // pointer still on the last good pair
-    assert(Pipeline.readCurrentAnn(dir).get.endsWith("ann-day2"))
+    assert(VersionedStore.Ann.current(dir).get.endsWith("ann-day2"))
   }
 
   test("compactAnn: one segment, identical index + probes, rollback across it intact") {
@@ -169,9 +170,10 @@ class AnnAppendSpec extends SparkSpec {
     val preDay2 = indexRows(Pipeline.readAnnIndex(spark, s"$dir/ann-day2"))
 
     val compacted = Pipeline.compactAnn(spark, dir, "wk1")
-    assert(Pipeline.readCurrentAnn(dir).get === compacted)
+    assert(VersionedStore.Ann.current(dir).get === compacted)
     // layout: ONE segment, the SAME frozen model reference
-    val (modelRef, segRefs) = Pipeline.readAnnManifest(compacted)
+    val m = VersionedStore.Ann.manifest(compacted)
+    val (modelRef, segRefs) = (m.model.get, m.segments)
     assert(modelRef === "_ann_models/model-day1", "compaction must not touch the model")
     assert(segRefs === Seq("_ann_segments/seg-wk1"))
     // contents: bit-identical index rows, so probes are identical too
@@ -186,7 +188,7 @@ class AnnAppendSpec extends SparkSpec {
     // rollback across the compaction: pre-compact manifests still read
     // their exact segment prefix (old segments are never rewritten)
     assert(indexRows(Pipeline.readAnnIndex(spark, s"$dir/ann-day2")) === preDay2)
-    Pipeline.flipAnnPointer(dir, "ann-day2", "day2")
+    VersionedStore.Ann.flip(dir, "ann-day2", "day2")
     assert(indexRows(pairIndex(dir)) === preDay2)
   }
 
@@ -194,7 +196,7 @@ class AnnAppendSpec extends SparkSpec {
     val dir = tmpDir("ann-compact-noop")
     val day1 = Similarity.ivfPqIndex(emb(0 until 20), "vec_id", "embedding", coarse, codebooks)
     Pipeline.publishAnn(spark, dir, "day1", day1, coarse, codebooks)
-    val live = Pipeline.readCurrentAnn(dir).get
+    val live = VersionedStore.Ann.current(dir).get
     // already compact: same dir back, no version burned, nothing written
     assert(Pipeline.compactAnn(spark, dir, "wk1") === live)
     assert(!new java.io.File(s"$dir/ann-wk1").exists())
@@ -243,8 +245,8 @@ class AnnAppendSpec extends SparkSpec {
     Pipeline.publishAnn(spark, dir, "base", base, coarse, codebooks)
     Pipeline.absorbAnnBatch(spark, dir, 1L, emb(20 until 30), "vec_id", "embedding")
     Pipeline.compactAnn(spark, dir, "wk1")
-    val cur = Pipeline.readCurrentAnn(dir).get
-    assert(Pipeline.readAnnAbsorbed(cur) === Set(1L),
+    val cur = VersionedStore.Ann.current(dir).get
+    assert(VersionedStore.Ann.manifest(cur).absorbed === Set(1L),
       "compaction must carry the absorbed-batch record forward")
     val before = indexRows(pairIndex(dir))
     // the replay: same batch id, same (or re-fetched) vectors
@@ -253,8 +255,25 @@ class AnnAppendSpec extends SparkSpec {
     assert(indexRows(pairIndex(dir)) === before, "replay must not change the index")
     // a genuinely new batch still appends, and carries the record on
     Pipeline.absorbAnnBatch(spark, dir, 2L, emb(30 until 35), "vec_id", "embedding")
-    assert(Pipeline.readAnnAbsorbed(Pipeline.readCurrentAnn(dir).get) === Set(1L, 2L))
+    assert(VersionedStore.Ann.manifest(VersionedStore.Ann.current(dir).get).absorbed === Set(1L, 2L))
     assert(pairIndex(dir).count() === 35)
+  }
+
+  test("absorbAnnBatch replay after a crash between manifest commit and pointer flip rolls forward") {
+    val dir = tmpDir("ann-absorb-rollforward")
+    val base = Similarity.ivfPqIndex(emb(0 until 20), "vec_id", "embedding", coarse, codebooks)
+    Pipeline.publishAnn(spark, dir, "base", base, coarse, codebooks)
+    val committed = Pipeline.absorbAnnBatch(spark, dir, 1L, emb(20 until 30), "vec_id", "embedding")
+    val uninterrupted = indexRows(pairIndex(dir))
+    // the on-disk state the crash leaves: batch 1's manifest committed,
+    // the pointer still on the previous version
+    VersionedStore.Ann.flip(dir, "ann-base", "base")
+    val ret = Pipeline.absorbAnnBatch(spark, dir, 1L, emb(20 until 30), "vec_id", "embedding")
+    assert(ret === committed && ret.endsWith("ann-batch-1"))
+    assert(VersionedStore.Ann.current(dir).get === committed)
+    assert(indexRows(pairIndex(dir)) === uninterrupted)
+    assert(uninterrupted === indexRows(
+      Similarity.ivfPqIndex(emb(0 until 30), "vec_id", "embedding", coarse, codebooks)))
   }
 
   test("appendAnn before the first publish fails loudly") {
@@ -269,16 +288,16 @@ class AnnAppendSpec extends SparkSpec {
     val dir = tmpDir("ann-del")
     val full = Similarity.ivfPqIndex(emb(0 until 40), "vec_id", "embedding", coarse, codebooks)
     Pipeline.publishAnn(spark, dir, "day1", full, coarse, codebooks)
-    val baseDir = Pipeline.readCurrentAnn(dir).get
+    val baseDir = VersionedStore.Ann.current(dir).get
     Pipeline.deleteAnn(spark, dir, "takedown", emb(25 until 40), "vec_id")
-    val cur = Pipeline.readCurrentAnn(dir).get
+    val cur = VersionedStore.Ann.current(dir).get
     val without = Similarity.ivfPqIndex(emb(0 until 25), "vec_id", "embedding", coarse, codebooks)
     assert(indexRows(Pipeline.readAnnIndex(spark, cur)) === indexRows(without))
     // the RETAINED pre-delete pair still sees everything (time travel)
     // and names the SAME data segments — deletion is a manifest op
     assert(indexRows(Pipeline.readAnnIndex(spark, baseDir)) === indexRows(full))
-    assert(Pipeline.readAnnManifest(cur)._2 === Pipeline.readAnnManifest(baseDir)._2)
-    assert(Pipeline.readAnnTombstones(cur).size === 1)
+    assert(VersionedStore.Ann.manifest(cur).segments === VersionedStore.Ann.manifest(baseDir).segments)
+    assert(VersionedStore.Ann.manifest(cur).tombstones.size === 1)
   }
 
   test("re-appending deleted vectors resurrects them; compaction materializes deletions") {
@@ -290,15 +309,15 @@ class AnnAppendSpec extends SparkSpec {
     // index, so without the resurrection rule the stale tombstone
     // would silently hide the appended rows
     Pipeline.appendAnn(spark, dir, "readd", emb(20 until 25), "vec_id", "embedding")
-    val afterReadd = Pipeline.readCurrentAnn(dir).get
+    val afterReadd = VersionedStore.Ann.current(dir).get
     assert(indexRows(Pipeline.readAnnIndex(spark, afterReadd)) === indexRows(
       Similarity.ivfPqIndex(emb(0 until 25), "vec_id", "embedding", coarse, codebooks)))
-    assert(Pipeline.readAnnTombstones(afterReadd).size === 1)
+    assert(VersionedStore.Ann.manifest(afterReadd).tombstones.size === 1)
     // compaction materializes the remaining deletion and clears the
     // tombstone list (the single-segment+tombstones early-return case
     // is pinned on the postings side)
     val compacted = Pipeline.compactAnn(spark, dir, "weekly")
-    assert(Pipeline.readAnnTombstones(compacted).isEmpty)
+    assert(VersionedStore.Ann.manifest(compacted).tombstones.isEmpty)
     assert(indexRows(Pipeline.readAnnIndex(spark, compacted)) === indexRows(
       Similarity.ivfPqIndex(emb(0 until 25), "vec_id", "embedding", coarse, codebooks)))
   }

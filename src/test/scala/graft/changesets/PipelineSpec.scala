@@ -205,7 +205,7 @@ class PipelineSpec extends SparkSpec {
     // through the same manifest — index rows and model must come from
     // the same build
     def readerSees(): (Long, Double) = {
-      val dir = Pipeline.readCurrentAnn(pub).get
+      val dir = VersionedStore.Ann.current(pub).get
       val rows = Pipeline.readAnnIndex(spark, dir).count()
       val m = graft.operators.AnnModel.load(spark, Pipeline.annModelDir(dir))
       (rows, m.coarse(0)(0))
@@ -227,13 +227,13 @@ class PipelineSpec extends SparkSpec {
     assert(readerSees() === ((4L, 2.0)))
 
     // rollback: ONE pointer flip reverts BOTH halves
-    Pipeline.flipAnnPointer(pub, "ann-v1", "v1")
+    VersionedStore.Ann.flip(pub, "ann-v1", "v1")
     assert(readerSees() === ((3L, 1.0)))
 
     // retention never deletes the pointed-at pair, even when mtime
     // ordering would age it out after the rollback (keep=0 ages out
     // every unprotected pair)
-    Pipeline.applyAnnRetention(pub, keep = 0, protect = Pipeline.readCurrentAnn(pub))
+    VersionedStore.Ann.retain(pub, keep = 0)
     assert(readerSees() === ((3L, 1.0)))
     assert(!Files.exists(Paths.get(pub, "ann-v2")), "unprotected pair should age out")
   }

@@ -26,7 +26,7 @@ class PostingsLifecycleSpec extends SparkSpec {
     val dir = tmpDir("post-append")
     Pipeline.publishPostings(spark, dir, "base", docs(0 until 30), "doc_id", "text")
     Pipeline.appendPostings(spark, dir, "day2", docs(30 until 50), "doc_id", "text")
-    val cur = Pipeline.readCurrentPostings(dir).get
+    val cur = VersionedStore.Postings.current(dir).get
     assert(cur.endsWith("post-day2"))
     val grown = postRows(Pipeline.readPostingsIndex(spark, cur)
       .select(col("term"), col("doc"), col("tf")))
@@ -56,7 +56,7 @@ class PostingsLifecycleSpec extends SparkSpec {
     Pipeline.appendPostings(spark, dir, "day2", docs(30 until 50), "doc_id", "text")
     assert(filesUnder(new java.io.File(store, "seg-base")) === baseFiles,
       "append rewrote the base segment — cost is O(index), not O(delta)")
-    assert(Pipeline.readPostingsManifest(Pipeline.readCurrentPostings(dir).get) ===
+    assert(VersionedStore.Postings.manifest(VersionedStore.Postings.current(dir).get).segments ===
       Seq("_postings_segments/seg-base", "_postings_segments/seg-day2"))
     val delta = spark.read.parquet(s"$dir/_postings_segments/seg-day2")
     assert(delta.agg(min(col("doc"))).head.getLong(0) >= 30L)
@@ -82,8 +82,8 @@ class PostingsLifecycleSpec extends SparkSpec {
       .select(col("term"), col("doc"), col("tf")))
     assert(base === postRows(Retrieval.postings(docs(0 until 30), "doc_id", "text")
       .select(col("term"), col("doc"), col("tf"))))
-    Pipeline.flipPostingsPointer(dir, "post-base", "base")
-    assert(Pipeline.readCurrentPostings(dir).get.endsWith("post-base"))
+    VersionedStore.Postings.flip(dir, "post-base", "base")
+    assert(VersionedStore.Postings.current(dir).get.endsWith("post-base"))
   }
 
   test("retention keeps segments any retained manifest references, reaps orphans") {
@@ -91,8 +91,7 @@ class PostingsLifecycleSpec extends SparkSpec {
     Pipeline.publishPostings(spark, dir, "d1", docs(0 until 10), "doc_id", "text")
     Pipeline.appendPostings(spark, dir, "d2", docs(10 until 20), "doc_id", "text")
     Pipeline.appendPostings(spark, dir, "d3", docs(20 until 30), "doc_id", "text")
-    Pipeline.applyPostingsRetention(dir, keep = 1,
-      protect = Pipeline.readCurrentPostings(dir))
+    VersionedStore.Postings.retain(dir, keep = 1)
     assert(!new java.io.File(s"$dir/post-d1").exists())
     assert(!new java.io.File(s"$dir/post-d2").exists())
     // d3's manifest references all three segments — none reaped
@@ -102,11 +101,10 @@ class PostingsLifecycleSpec extends SparkSpec {
     val orphan = new java.io.File(s"$dir/_postings_segments/seg-orphan")
     orphan.mkdirs()
     java.nio.file.Files.writeString(orphan.toPath.resolve("part-0.parquet"), "x")
-    Pipeline.applyPostingsRetention(dir, keep = 1,
-      protect = Pipeline.readCurrentPostings(dir))
+    VersionedStore.Postings.retain(dir, keep = 1)
     assert(!orphan.exists())
     assert(Pipeline.readPostingsIndex(spark,
-      Pipeline.readCurrentPostings(dir).get).select(col("doc")).distinct().count() === 30L)
+      VersionedStore.Postings.current(dir).get).select(col("doc")).distinct().count() === 30L)
   }
 
   test("compact: one segment, postings preserved, rollback intact, token collision guarded") {
@@ -115,20 +113,20 @@ class PostingsLifecycleSpec extends SparkSpec {
     Pipeline.appendPostings(spark, dir, "d2", docs(20 until 35), "doc_id", "text")
     Pipeline.appendPostings(spark, dir, "d3", docs(35 until 50), "doc_id", "text")
     val preCompact = postRows(Pipeline.readPostingsIndex(
-        spark, Pipeline.readCurrentPostings(dir).get)
+        spark, VersionedStore.Postings.current(dir).get)
       .select(col("term"), col("doc"), col("tf")))
     Pipeline.compactPostings(spark, dir, "w1")
-    val cur = Pipeline.readCurrentPostings(dir).get
+    val cur = VersionedStore.Postings.current(dir).get
     assert(cur.endsWith("post-w1"))
-    assert(Pipeline.readPostingsManifest(cur) === Seq("_postings_segments/seg-w1"))
+    assert(VersionedStore.Postings.manifest(cur).segments === Seq("_postings_segments/seg-w1"))
     assert(postRows(Pipeline.readPostingsIndex(spark, cur)
       .select(col("term"), col("doc"), col("tf"))) === preCompact)
     // rollback to the pre-compact version still reads all three segments
-    Pipeline.flipPostingsPointer(dir, "post-d3", "d3")
+    VersionedStore.Postings.flip(dir, "post-d3", "d3")
     assert(postRows(Pipeline.readPostingsIndex(
-        spark, Pipeline.readCurrentPostings(dir).get)
+        spark, VersionedStore.Postings.current(dir).get)
       .select(col("term"), col("doc"), col("tf"))) === preCompact)
-    Pipeline.flipPostingsPointer(dir, "post-w1", "w1")
+    VersionedStore.Postings.flip(dir, "post-w1", "w1")
     // reusing a retained version token post-compaction must fail, not
     // overwrite an immutable segment older manifests reference
     val e = intercept[IllegalArgumentException] {
@@ -142,10 +140,10 @@ class PostingsLifecycleSpec extends SparkSpec {
   test("deletePostings: delete == rebuild-without; history unaffected; segments untouched") {
     val dir = tmpDir("post-del")
     Pipeline.publishPostings(spark, dir, "base", docs(0 until 40), "doc_id", "text")
-    val baseDir = Pipeline.readCurrentPostings(dir).get
+    val baseDir = VersionedStore.Postings.current(dir).get
     Pipeline.deletePostings(spark, dir, "takedown",
       docs(25 until 40), "doc_id")
-    val cur = Pipeline.readCurrentPostings(dir).get
+    val cur = VersionedStore.Postings.current(dir).get
     // live read = rebuild over the surviving docs, bit-for-bit
     assert(postRows(Pipeline.readPostingsIndex(spark, cur)
         .select(col("term"), col("doc"), col("tf")))
@@ -158,8 +156,8 @@ class PostingsLifecycleSpec extends SparkSpec {
         .select(col("term"), col("doc"), col("tf")))
       === postRows(Retrieval.postings(docs(0 until 40), "doc_id", "text")
         .select(col("term"), col("doc"), col("tf"))))
-    assert(Pipeline.readPostingsManifest(cur) === Pipeline.readPostingsManifest(baseDir))
-    assert(Pipeline.readPostingsTombstones(cur).size === 1)
+    assert(VersionedStore.Postings.manifest(cur).segments === VersionedStore.Postings.manifest(baseDir).segments)
+    assert(VersionedStore.Postings.manifest(cur).tombstones.size === 1)
   }
 
   test("re-appending a deleted doc resurrects it (tombstone set shrinks)") {
@@ -170,15 +168,15 @@ class PostingsLifecycleSpec extends SparkSpec {
     // the resurrection rule the stale tombstone would hide them and
     // the append would silently index nothing
     Pipeline.appendPostings(spark, dir, "readd", docs(20 until 25), "doc_id", "text")
-    val cur = Pipeline.readCurrentPostings(dir).get
+    val cur = VersionedStore.Postings.current(dir).get
     assert(postRows(Pipeline.readPostingsIndex(spark, cur)
         .select(col("term"), col("doc"), col("tf")))
       === postRows(Retrieval.postings(docs(0 until 25), "doc_id", "text")
         .select(col("term"), col("doc"), col("tf"))))
     // full resurrection clears the tombstone list entirely
     Pipeline.appendPostings(spark, dir, "readd2", docs(25 until 30), "doc_id", "text")
-    assert(Pipeline.readPostingsTombstones(
-      Pipeline.readCurrentPostings(dir).get).isEmpty)
+    assert(VersionedStore.Postings.manifest(
+      VersionedStore.Postings.current(dir).get).tombstones.isEmpty)
   }
 
   test("compaction materializes deletions: one clean segment, tombstones cleared") {
@@ -188,9 +186,9 @@ class PostingsLifecycleSpec extends SparkSpec {
     // single data segment + live tombstones: compact must still run
     // (materializing the deletion IS the rewrite)
     val compacted = Pipeline.compactPostings(spark, dir, "weekly")
-    assert(compacted !== Pipeline.readPostingsManifest(compacted).head)
-    assert(Pipeline.readPostingsTombstones(compacted).isEmpty)
-    assert(Pipeline.readPostingsManifest(compacted).size === 1)
+    assert(compacted !== VersionedStore.Postings.manifest(compacted).segments.head)
+    assert(VersionedStore.Postings.manifest(compacted).tombstones.isEmpty)
+    assert(VersionedStore.Postings.manifest(compacted).segments.size === 1)
     assert(postRows(Pipeline.readPostingsIndex(spark, compacted)
         .select(col("term"), col("doc"), col("tf")))
       === postRows(Retrieval.postings(docs(0 until 10), "doc_id", "text")

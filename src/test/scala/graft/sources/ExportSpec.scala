@@ -173,6 +173,9 @@ class ExportSpec extends SparkSpec {
     // the replayed positions are the full contiguous training order
     assert(replay.agg(min($"position"), max($"position"),
       count_distinct($"position")).collect()(0).toSeq === Seq(1L, 130L, 130L))
+    // replayOrder: (id, position, shard) in position order
+    assert(Export.replayOrder(spark, out, "doc_id").collect()
+      .map(r => (r.getLong(1), r.getLong(2))).toSeq === (1L to 130L).map(p => (p, (p - 1) / 32)))
   }
 
   test("verifyShards failure modes: truncated, missing, unexpected shard; no manifest") {
@@ -284,6 +287,22 @@ class ExportSpec extends SparkSpec {
       Export.readShardsInOrder(spark, out)
     }
     assert(e.getMessage.contains("EMPTY"))
+  }
+
+  test("replayOrder: an empty export replays empty; a stray shard dir next to it fails") {
+    val out = tmpDir("export-empty-stray") + "/data"
+    Export.writeShardsWithManifest(
+      docs(10).filter($"doc_id" > 100), "doc_id", out, seed = 7L, rowsPerShard = 32L)
+    val empty = Export.replayOrder(spark, out, "doc_id")
+    assert(empty.columns.toSeq === Seq("doc_id", "position", "shard"))
+    assert(empty.count() === 0L)
+    // a foreign or aborted write lands shard files next to the 0-row
+    // manifest: replaying nothing must not pass it silently
+    docs(3).withColumn("position", $"doc_id").write.parquet(s"$out/shard=0")
+    val e = intercept[IllegalStateException] {
+      Export.replayOrder(spark, out, "doc_id")
+    }
+    assert(e.getMessage.contains("shard=*"))
   }
 
   test("appendShardsWithManifest: O(delta) append, untouched shards byte-identical, replays converge") {

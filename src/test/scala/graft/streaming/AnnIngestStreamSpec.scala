@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.changesets.Pipeline
+import graft.changesets.{Pipeline, VersionedStore}
 import graft.operators.{Encode, Similarity}
 
 /** Streaming ANN ingest (EventStreams.annIngestStream): encode each
@@ -53,13 +53,13 @@ class AnnIngestStreamSpec extends SparkSpec {
       input.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
 
-    val cur = Pipeline.readCurrentAnn(publishDir).get
+    val cur = VersionedStore.Ann.current(publishDir).get
     val streamed = indexRows(Pipeline.readAnnIndex(spark, cur))
     val scratch = indexRows(Similarity.ivfPqIndex(
       vecsOf(seed ++ b1 ++ b2), "doc_id", "embedding", coarse, codebooks))
     assert(streamed === scratch)
     // one delta segment per micro-batch, named by its batch id
-    val (_, segs) = Pipeline.readAnnManifest(cur)
+    val segs = VersionedStore.Ann.manifest(cur).segments
     assert(segs === Seq("_ann_segments/seg-day0",
       "_ann_segments/seg-batch-0", "_ann_segments/seg-batch-1"))
 

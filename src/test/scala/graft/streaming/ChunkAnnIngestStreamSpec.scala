@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.changesets.Pipeline
+import graft.changesets.{Pipeline, VersionedStore}
 import graft.operators.{Encode, Retrieval, Similarity}
 
 /** Streaming CHUNK-level ANN ingest (EventStreams.chunkAnnIngestStream):
@@ -62,12 +62,12 @@ class ChunkAnnIngestStreamSpec extends SparkSpec {
       input.addData(b2: _*); q.processAllAvailable()
     } finally q.stop()
 
-    val cur = Pipeline.readCurrentAnn(publishDir).get
+    val cur = VersionedStore.Ann.current(publishDir).get
     val streamed = indexRows(Pipeline.readAnnIndex(spark, cur))
     val scratch = indexRows(Similarity.ivfPqIndex(
       chunkVecsOf(seed ++ b1 ++ b2), "vid", "embedding", coarse, codebooks))
     assert(streamed === scratch)
-    val (_, segs) = Pipeline.readAnnManifest(cur)
+    val segs = VersionedStore.Ann.manifest(cur).segments
     assert(segs === Seq("_ann_segments/seg-day1",
       "_ann_segments/seg-batch-0", "_ann_segments/seg-batch-1"))
 
@@ -84,7 +84,7 @@ class ChunkAnnIngestStreamSpec extends SparkSpec {
     Pipeline.publishAnn(spark, publishDir, "day1",
       Similarity.ivfPqIndex(chunkVecsOf(seed), "vid", "embedding", coarse, codebooks),
       coarse, codebooks)
-    val before = Pipeline.readCurrentAnn(publishDir).get
+    val before = VersionedStore.Ann.current(publishDir).get
     val after = Pipeline.absorbChunkAnnBatch(spark, publishDir, 7L,
       Seq(99L -> "").toDF("doc_id", "text"), "doc_id", "text", enc, win, stride)
     assert(after === before)

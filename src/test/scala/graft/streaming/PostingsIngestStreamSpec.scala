@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.changesets.Pipeline
+import graft.changesets.{Pipeline, VersionedStore}
 import graft.operators.Retrieval
 
 /** Streaming retrieval-index ingest (postingsIngestStream /
@@ -39,11 +39,11 @@ class PostingsIngestStreamSpec extends SparkSpec {
       input.addData((30 until 40).map(i => (i.toLong, s"alpha doc$i shared beta word${i % 3}")): _*)
       q.processAllAvailable()
     } finally q.stop()
-    val cur = Pipeline.readCurrentPostings(dir).get
+    val cur = VersionedStore.Postings.current(dir).get
     assert(postRows(Pipeline.readPostingsIndex(spark, cur))
       === postRows(Retrieval.postings(docs(0 until 40), "doc_id", "text")))
     // both batch ids are durably recorded as absorbed
-    assert(Pipeline.readPostingsAbsorbed(cur) === Set(0L, 1L))
+    assert(VersionedStore.Postings.manifest(cur).absorbed === Set(0L, 1L))
   }
 
   test("replayed batch ids skip — before AND after a compaction rewrites the segments") {
@@ -51,19 +51,34 @@ class PostingsIngestStreamSpec extends SparkSpec {
     Pipeline.publishPostings(spark, dir, "base", docs(0 until 10), "doc_id", "text")
     val b1 = docs(10 until 20)
     Pipeline.absorbPostingsBatch(spark, dir, 7L, b1, "doc_id", "text")
-    val afterFirst = Pipeline.readCurrentPostings(dir).get
+    val afterFirst = VersionedStore.Postings.current(dir).get
     // immediate replay: same id -> no new version, no disjointness trip
     assert(Pipeline.absorbPostingsBatch(spark, dir, 7L, b1, "doc_id", "text")
       === afterFirst)
     // compaction rewrites the live manifest to ONE segment...
     Pipeline.compactPostings(spark, dir, "weekly")
-    val compacted = Pipeline.readCurrentPostings(dir).get
-    assert(Pipeline.readPostingsManifest(compacted).size === 1)
+    val compacted = VersionedStore.Postings.current(dir).get
+    assert(VersionedStore.Postings.manifest(compacted).segments.size === 1)
     // ...and the absorbed record must survive it: a late replay still
     // skips instead of crash-looping on the duplicate-doc require
     assert(Pipeline.absorbPostingsBatch(spark, dir, 7L, b1, "doc_id", "text")
       === compacted)
     assert(postRows(Pipeline.readPostingsIndex(spark, compacted))
+      === postRows(Retrieval.postings(docs(0 until 20), "doc_id", "text")))
+  }
+
+  test("replay after a crash between manifest commit and pointer flip rolls forward") {
+    val dir = tmpDir("pis-rollforward")
+    Pipeline.publishPostings(spark, dir, "base", docs(0 until 10), "doc_id", "text")
+    val b1 = docs(10 until 20)
+    val committed = Pipeline.absorbPostingsBatch(spark, dir, 1L, b1, "doc_id", "text")
+    // the on-disk state the crash leaves: batch 1's manifest committed,
+    // the pointer still on the previous version
+    VersionedStore.Postings.flip(dir, "post-base", "base")
+    val ret = Pipeline.absorbPostingsBatch(spark, dir, 1L, b1, "doc_id", "text")
+    assert(ret === committed && ret.endsWith("post-batch-1"))
+    assert(VersionedStore.Postings.current(dir).get === committed)
+    assert(postRows(Pipeline.readPostingsIndex(spark, ret))
       === postRows(Retrieval.postings(docs(0 until 20), "doc_id", "text")))
   }
 }
